@@ -35,6 +35,24 @@ def test_checkpoint_resume_zero_recompute(spark, tmp_path):
     assert full3.filter("v != k * 2").count() == 0
 
 
+def test_resume_on_uri_base(spark, tmp_path):
+    """A file:// checkpoint base (any Hadoop URI: hdfs://, s3a://) resumes
+    like a plain path: nothing recomputed and no duplicate rows appended."""
+    base = "file://" + str(tmp_path / "ckpt_uri")
+    work = spark.range(20).select(F.col("id").alias("k"))
+
+    def compute(df):
+        return df.withColumn("v", F.col("k") + 1)
+
+    CheckpointManager(spark, base).run_stage("S", work, compute, ["k"])
+    cm = CheckpointManager(spark, base)  # resubmission: a new driver program
+    full = cm.run_stage("S", work, compute, ["k"])
+    assert cm.last_recomputed == 0
+    assert full.count() == 20
+    # raw stage files, without read()'s dropDuplicates
+    assert spark.read.parquet(base + "/S").count() == 20
+
+
 def test_kill_and_resume_mid_pipeline(spark, tmp_path):
     """Simulated kill: stage A checkpointed, job dies before stage B; rerun
     completes B without recomputing A."""

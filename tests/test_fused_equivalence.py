@@ -43,42 +43,3 @@ def test_fused_equals_unfused(spark):
     fused.unpersist()
     chunks_u.unpersist()
 
-
-def test_fused_vs_unfused_heuristic_ner(spark):
-    """The unfused path (heuristic_candidates table + extract_mentions
-    merge) must produce byte-identical mentions to the fused in-UDF pass —
-    same candidates, same ruler-first merge, different dataflow."""
-    from wbkg.extract import (
-        acronyms_from_fused,
-        build_pattern_rows,
-        chunk_and_extract,
-        chunks_from_fused,
-        extract_mentions,
-        heuristic_candidates,
-        mentions_from_fused,
-    )
-    from wbkg.synth import build_entity_dict_rows, build_unbis_rows, gen_documents_df
-
-    n = 25
-    docs = gen_documents_df(spark, n)
-    pats = build_pattern_rows(build_entity_dict_rows(n), build_unbis_rows())
-    fused = chunk_and_extract(docs, pats, heuristic_ner=True).persist()
-    want = {
-        tuple(r)
-        for r in mentions_from_fused(fused)
-        .select("doc_id", "chunk_id", "surface", "label", "begin", "end")
-        .collect()
-    }
-    chunks = chunks_from_fused(fused)
-    acr = acronyms_from_fused(fused)
-    got = {
-        tuple(r)
-        for r in extract_mentions(
-            chunks, acr, pats, heuristic_cands_df=heuristic_candidates(chunks)
-        )
-        .select("doc_id", "chunk_id", "surface", "label", "begin", "end")
-        .collect()
-    }
-    fused.unpersist()
-    assert got == want
-    assert any(t[3] == "HEUR_ENT" for t in want)  # the pass actually fired

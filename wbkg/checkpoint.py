@@ -30,6 +30,8 @@ from typing import Callable, List
 
 from pyspark.sql import DataFrame, SparkSession
 
+from wbkg.io import hadoop_fs
+
 
 class CheckpointManager:
     def __init__(self, spark: SparkSession, base_dir: str):
@@ -41,8 +43,12 @@ class CheckpointManager:
         return os.path.join(self.base_dir, stage)
 
     def _exists(self, path: str) -> bool:
-        return os.path.isdir(path) and any(
-            f.endswith(".parquet") or f == "_SUCCESS" for f in os.listdir(path)
+        # through the session's Hadoop FileSystem, so a URI base (file://,
+        # hdfs://, s3a://) resumes exactly like a plain path
+        fs, hpath = hadoop_fs(self.spark, path)
+        return fs.exists(hpath) and any(
+            name.endswith(".parquet") or name == "_SUCCESS"
+            for name in (st.getPath().getName() for st in fs.listStatus(hpath))
         )
 
     def exists(self, stage: str) -> bool:

@@ -204,7 +204,9 @@ def chunk_documents(
     chunk_size: int = DEFAULT_CHUNK_SIZE,
     chunk_overlap: int = DEFAULT_CHUNK_OVERLAP,
 ):
-    """documents_interleaved (doc_id, spans) -> CHUNKS DataFrame.
+    """documents_interleaved (doc_id, spans) -> CHUNKS DataFrame. Unfused
+    reference operator: the pipelines chunk inside extract.chunk_and_extract,
+    which the tests check against this one.
 
     Uses mapInPandas (not groupBy().applyInPandas): each input row is already
     one whole document, so no shuffle is needed — the fold runs where the

@@ -474,6 +474,8 @@ def flip_acronyms_py(primary: Dict[str, str], detected: Dict[str, str]) -> Dict[
 
 def extract_acronyms(chunks_df: DataFrame) -> DataFrame:
     """chunks -> per-doc acronym table (doc_id, abbr, expansion, source).
+    Unfused reference operator: the pipelines extract through
+    chunk_and_extract, which the tests check against this one.
 
     Two-phase: per-chunk detection inside mapInPandas (C2+C3), then a
     groupBy(doc_id, abbr) first-wins merge with glossary priority (A2) done as
@@ -681,6 +683,8 @@ def chunk_and_extract(
 ) -> DataFrame:
     """Fused stage 1+2: spans -> chunks + per-doc acronyms + per-chunk
     mentions in ONE mapInPandas pass — zero shuffles until the linking join.
+    The one extraction pass of every entry point (run_pipeline, the
+    spark-submit job, streaming).
 
     The input row already holds the whole document, so chunking, acronym
     detection (which needs all chunks of a doc) and mention matching are
@@ -781,44 +785,13 @@ def mentions_from_fused(fused: DataFrame) -> DataFrame:
     return m.filter(~F.col("label").isin(EXCLUDED_ENTS))
 
 
-def heuristic_candidates(chunks_df: DataFrame) -> DataFrame:
-    """Doc-scoped heuristic-NER candidate table for the UNFUSED path:
-    (doc_id, cands array<string>). The emitter needs the whole document
-    (frequency gate over all chunks), so chunk texts group by doc_id once —
-    the fused path (chunk_and_extract) computes the same list in-UDF with
-    no shuffle; this operator exists for the checkpointed job pipeline.
-    Chunks sort by chunk_idx inside the UDF so candidate order (and the
-    max_candidates cap) is deterministic under any shuffle order."""
-    per_doc = chunks_df.groupBy("doc_id").agg(
-        F.collect_list(F.struct("chunk_idx", "text")).alias("_chunks")
-    )
-
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, chunks in zip(pdf["doc_id"], pdf["_chunks"]):
-                cd = sorted(
-                    (c if isinstance(c, dict) else c.asDict() for c in chunks),
-                    key=lambda c: c["chunk_idx"],
-                )
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "cands": heuristic_ner_candidates_py([c["text"] for c in cd]),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "cands"])
-
-    return per_doc.mapInPandas(emit, schema="doc_id string, cands array<string>")
-
-
 def extract_mentions(
     chunks_df: DataFrame,
     acronyms_df: DataFrame,
     pattern_rows: List[Tuple[str, str, str]],
-    heuristic_cands_df: DataFrame | None = None,
 ) -> DataFrame:
-    """chunks + per-doc acronyms -> MENTIONS.
+    """chunks + per-doc acronyms -> MENTIONS. Unfused reference operator
+    (see extract_acronyms).
 
     The static dictionary automaton is broadcast once (executor-side build,
     cached per worker). Per-doc acronym patterns (ACRONYM + ACRONYM_EXPANDED,
@@ -840,19 +813,13 @@ def extract_mentions(
     enriched = chunks_df.select("doc_id", "chunk_id", "text").join(
         acro_by_doc, "doc_id", "left"
     )
-    if heuristic_cands_df is not None:
-        enriched = enriched.join(heuristic_cands_df, "doc_id", "left")
-
-    has_heur = heuristic_cands_df is not None
 
     def match(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         static_ac = TokenIndexMatcher(bc_patterns.value)
         for pdf in batches:
             rows = []
-            heur_memo: dict = {}  # per-batch: bounded, and a doc's chunks co-batch
-            cands_col = pdf["cands"] if has_heur else [None] * len(pdf)
-            for doc_id, chunk_id, text, acros, cands in zip(
-                pdf["doc_id"], pdf["chunk_id"], pdf["text"], pdf["_acros"], cands_col
+            for doc_id, chunk_id, text, acros in zip(
+                pdf["doc_id"], pdf["chunk_id"], pdf["text"], pdf["_acros"]
             ):
                 norm_text = normalize_surface(text)
                 tokens = _tokenize(norm_text)
@@ -873,25 +840,6 @@ def extract_mentions(
                     if m[0] >= last_end:
                         sel.append(m)
                         last_end = m[1]
-                if cands is not None and len(cands):
-                    # ruler-first: heuristic candidates fill only the gaps
-                    # (same merge as the fused _match_chunk). One matcher
-                    # per DOC, memoized across its chunks in this batch.
-                    heur_ac = heur_memo.get(doc_id)
-                    if heur_ac is None:
-                        heur_ac = heur_memo[doc_id] = TokenIndexMatcher(
-                            [(s, HEUR_LABEL, normalize_surface(s)) for s in cands]
-                        )
-                    ruled = [(m[0], m[1]) for m in sel]
-                    extra = sorted(
-                        heur_ac.find_normalized(norm_text, tokens),
-                        key=lambda m: (m[0], -(m[1] - m[0])),
-                    )
-                    for m in extra:
-                        if all(m[1] <= b or m[0] >= e for b, e in ruled):
-                            sel.append(m)
-                            ruled.append((m[0], m[1]))
-                    sel.sort(key=lambda m: m[0])
                 for b, e, label, rule_id in sel:
                     surf = norm_text[b:e]
                     rows.append(

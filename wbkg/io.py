@@ -13,6 +13,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
+def hadoop_fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for `path` — a plain path or any URI the
+    session's Hadoop config resolves (file://, hdfs://, s3a://)."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
     w = df.write.mode("overwrite")
     if partition_by:
@@ -87,8 +94,7 @@ def compact_table(
     import math
 
     jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = hadoop_fs(spark, path)
     size = fs.getContentSummary(hpath).getLength()
     n_files = max(1, math.ceil(size / (target_file_mb * 1024 * 1024)))
 

@@ -1,17 +1,21 @@
 """spark-submit entry point (north_rule: `spark-submit --py-files wbkg.zip
 wbkg/job.py ...` on a multi-executor cluster).
 
-The ops-hardened variant of the pipeline: the heavy per-document stages
-(chunk, acronyms, mentions, link) are checkpointed at doc_id granularity and
-wrapped with per-partition lineage metrics; the cheap relational tail
-(canonicalize + materialize) recomputes from checkpoints. A killed job
-re-submitted with the same --work-dir resumes with zero recomputation of
-checkpointed documents (CheckpointManager anti-join; SURVEY §4.3).
+The checkpointed variant of `wbkg.pipeline.run_pipeline`, built from the
+same two halves: the fused extraction pass (`extract.chunk_and_extract`:
+chunks + per-doc acronyms + per-chunk mentions in one mapInPandas) is the
+one per-document stage, checkpointed at doc_id granularity and wrapped with
+per-partition lineage metrics; the relational KG tail
+(`pipeline.kg_from_fused`: link, canonicalize, materialize) recomputes from
+that checkpoint. A killed job re-submitted with the same --work-dir resumes
+with zero recomputation of checkpointed documents (CheckpointManager
+anti-join; SURVEY §4.3). The JSON report's `recomputed.chunks` is the number
+of documents extracted by this submission.
 
 Usage:
   spark-submit --py-files wbkg.zip wbkg/job.py \
       --n-docs 2000 --work-dir /tmp/wbkg_run [--input <parquet>] \
-      [--link-strategy broadcast|salted] [--with-communities]
+      [--link-strategy broadcast|salted] [--heuristic-ner] [--with-communities]
 
 Packaging: `python -m wbkg.job --make-zip wbkg.zip` emits the --py-files
 artifact.
@@ -87,20 +91,11 @@ def main(argv=None, spark=None):
 
     from pyspark.sql import functions as F
 
-    from wbkg.canonicalize import apply_canonicalization, canonical_map
     from wbkg.checkpoint import CheckpointManager
-    from wbkg.chunker import chunk_documents
-    from wbkg.extract import build_pattern_rows, extract_acronyms, extract_mentions
-    from wbkg.link import link_mentions
-    from wbkg.materialize import (
-        RDF_TYPE,
-        chunk_triples,
-        entity_triples,
-        metadata_triples,
-        nodes_from_edges,
-        union_distinct,
-    )
+    from wbkg.extract import build_pattern_rows, chunk_and_extract
+    from wbkg.materialize import nodes_from_edges, union_distinct
     from wbkg.metrics import with_lineage
+    from wbkg.pipeline import kg_from_fused
     from wbkg.session import get_spark
     from wbkg.synth import (
         build_entity_dict_rows,
@@ -131,43 +126,25 @@ def main(argv=None, spark=None):
     edict = entity_dict_df(spark, args.n_docs)
     pats = build_pattern_rows(build_entity_dict_rows(args.n_docs), build_unbis_rows())
 
-    recomputed = {}
-
-    chunks = ckpt.run_stage(
-        "chunks",
+    # the one per-document stage: the fused extraction table, checkpointed
+    # per doc_id. Its stage name differs from the per-operator stages
+    # (chunks/acronyms/mentions) older builds wrote, so a work dir from one
+    # of those recomputes every document instead of misreading their tables.
+    fused = ckpt.run_stage(
+        "fused",
         docs,
-        lambda d: with_lineage(chunk_documents(d), "chunks", metrics_dir),
+        lambda d: with_lineage(
+            chunk_and_extract(d, pats, heuristic_ner=args.heuristic_ner), "fused", metrics_dir
+        ),
         keys=["doc_id"],
     )
-    recomputed["chunks"] = ckpt.last_recomputed
+    # documents extracted by this submission; report readers know it as "chunks"
+    recomputed = {"chunks": ckpt.last_recomputed}
 
-    acronyms = ckpt.run_stage(
-        "acronyms",
-        chunks,
-        lambda c: with_lineage(extract_acronyms(c), "acronyms", metrics_dir),
-        keys=["doc_id"],
+    kg = kg_from_fused(
+        fused, edict, metadata_df=meta, link_strategy=args.link_strategy, persist_edges=False
     )
-    recomputed["acronyms"] = ckpt.last_recomputed
-
-    def compute_mentions(pending_chunks):
-        acr = acronyms.join(pending_chunks.select("doc_id").distinct(), "doc_id", "left_semi")
-        heur = None
-        if args.heuristic_ner:
-            from wbkg.extract import heuristic_candidates
-
-            heur = heuristic_candidates(pending_chunks)
-        return with_lineage(
-            extract_mentions(pending_chunks, acr, pats, heuristic_cands_df=heur),
-            "mentions",
-            metrics_dir,
-        )
-
-    mentions = ckpt.run_stage("mentions", chunks, compute_mentions, keys=["doc_id"])
-    recomputed["mentions"] = ckpt.last_recomputed
-
-    linked = link_mentions(mentions, edict, strategy=args.link_strategy).persist()
-    cmap = canonical_map(edict, acronyms, linked)
-    linked_c = apply_canonicalization(linked, cmap).persist()
+    chunks, linked_c = kg["chunks"], kg["linked"]
 
     bucketed_info = None
     if args.bucket_tables:
@@ -190,11 +167,7 @@ def main(argv=None, spark=None):
             ),
         }
 
-    ent_edges = entity_triples(linked_c).persist()
-    typed = ent_edges.filter(F.col("pred") == RDF_TYPE).select(F.col("subj").alias("uri")).distinct()
-    chk_edges = chunk_triples(chunks, linked_c, typed)
-    frames = [ent_edges, chk_edges, metadata_triples(meta, edict, dedup=False)]
-
+    edges = kg["edges"]
     if args.with_communities:
         from wbkg.communities import (
             community_triples,
@@ -210,10 +183,14 @@ def main(argv=None, spark=None):
         # leaf-level assignment
         co = cooccurrence_edges(linked_c)
         comms = final_communities(hierarchical_communities(co, max_cluster_size=50)).persist()
-        frames.append(community_triples(comms))
-        frames.append(summary_triples(summarize_communities(comms, chunks)))
+        # community and summary triples share no (subj, pred, obj) with the
+        # KG tail's edges, so only they need deduplicating among themselves
+        edges = edges.unionByName(
+            union_distinct(
+                community_triples(comms), summary_triples(summarize_communities(comms, chunks))
+            )
+        )
 
-    edges = union_distinct(*frames)
     if args.partition_edges_by_pred:
         # partition key = terminal pred segment (schema.org/mentions ->
         # 'mentions'): ~15 distinct values, so the layout stays wide-file,

@@ -164,7 +164,8 @@ def chunk_mention_triples(linked: DataFrame, typed_entities: DataFrame) -> DataF
 
 
 def chunk_triples(chunks: DataFrame, linked: DataFrame, typed_entities: DataFrame) -> DataFrame:
-    """chunk nodes + isPartOf + text + gated chunk->entity mentions."""
+    """chunk nodes + isPartOf + text + gated chunk->entity mentions (the
+    pipelines union the two halves separately, see pipeline.kg_from_fused)."""
     return chunk_node_triples(chunks).unionByName(
         chunk_mention_triples(linked, typed_entities)
     )

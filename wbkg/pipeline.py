@@ -1,8 +1,10 @@
 """End-to-end pipeline orchestration (SURVEY §7.0 target architecture).
 
-chunk -> acronyms -> mentions -> link -> canonicalize -> materialize.
-Each stage is a DataFrame; `run_pipeline` wires them and returns every
-intermediate so tests/checkpointing/benchmarks can grab any boundary.
+fused chunk + acronyms + mentions -> link -> canonicalize -> materialize.
+`chunk_and_extract` is the one extraction pass; `kg_from_fused` is the KG
+tail every batch entry point runs on its output (`run_pipeline` in memory,
+`wbkg.job` on the checkpointed fused table). Both return every intermediate
+so tests/checkpointing/benchmarks can grab any boundary.
 """
 
 from __future__ import annotations
@@ -13,10 +15,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wbkg.canonicalize import apply_canonicalization, canonical_map
+from wbkg.extract import (
+    acronyms_from_fused,
+    chunk_and_extract,
+    chunks_from_fused,
+    mentions_from_fused,
+)
 from wbkg.link import link_mentions
 from wbkg.materialize import (
     RDF_TYPE,
-    chunk_triples,
+    chunk_mention_triples,
+    chunk_node_triples,
     entity_triples,
     metadata_triples,
     nodes_from_edges,
@@ -24,30 +33,19 @@ from wbkg.materialize import (
 )
 
 
-def run_pipeline(
-    spark: SparkSession,
-    docs_df: DataFrame,
+def kg_from_fused(
+    fused: DataFrame,
     entity_dict_df: DataFrame,
-    pattern_rows: List[Tuple[str, str, str]],
     metadata_df: Optional[DataFrame] = None,
     link_strategy: str = "broadcast",
     cache: bool = True,
     persist_edges: bool = True,
     country_props_df: Optional[DataFrame] = None,
-    heuristic_ner: bool = False,
 ) -> Dict[str, DataFrame]:
-    # fused stage 1+2: one mapInPandas pass produces chunks, per-doc
-    # acronyms and per-chunk mentions with zero shuffles (see
-    # extract.chunk_and_extract); the unfused operators remain available for
-    # incremental/streaming use
-    from wbkg.extract import (
-        acronyms_from_fused,
-        chunk_and_extract,
-        chunks_from_fused,
-        mentions_from_fused,
-    )
-
-    fused = chunk_and_extract(docs_df, pattern_rows, heuristic_ner=heuristic_ner)
+    """KG tail over the fused extraction table (FUSED_SCHEMA rows): link ->
+    canonical map -> apply -> entity/chunk-mention/metadata triples ->
+    union-distinct edges, with the chunk node triples unioned in after
+    dedup."""
     if cache:
         fused = fused.persist()
     chunks = chunks_from_fused(fused)
@@ -68,7 +66,6 @@ def run_pipeline(
     typed_entities = (
         ent_edges.filter(F.col("pred") == RDF_TYPE).select(F.col("subj").alias("uri")).distinct()
     )
-    from wbkg.materialize import chunk_mention_triples, chunk_node_triples
 
     # chunk node triples (incl. the heavy schema:text literals) are unique by
     # construction — union them in AFTER dedup so the text payload never
@@ -96,3 +93,30 @@ def run_pipeline(
         "edges": edges,
         "nodes": nodes,
     }
+
+
+def run_pipeline(
+    spark: SparkSession,
+    docs_df: DataFrame,
+    entity_dict_df: DataFrame,
+    pattern_rows: List[Tuple[str, str, str]],
+    metadata_df: Optional[DataFrame] = None,
+    link_strategy: str = "broadcast",
+    cache: bool = True,
+    persist_edges: bool = True,
+    country_props_df: Optional[DataFrame] = None,
+    heuristic_ner: bool = False,
+) -> Dict[str, DataFrame]:
+    # fused stage 1+2: one mapInPandas pass produces chunks, per-doc
+    # acronyms and per-chunk mentions with zero shuffles (see
+    # extract.chunk_and_extract)
+    fused = chunk_and_extract(docs_df, pattern_rows, heuristic_ner=heuristic_ner)
+    return kg_from_fused(
+        fused,
+        entity_dict_df,
+        metadata_df=metadata_df,
+        link_strategy=link_strategy,
+        cache=cache,
+        persist_edges=persist_edges,
+        country_props_df=country_props_df,
+    )

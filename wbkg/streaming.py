@@ -4,10 +4,12 @@ The reference has no streaming — its incrementality is checkpoint-and-skip
 (src/pipeline.py:31-33). Here the same extraction pipeline runs as a
 Structured Streaming flow: a file source over the interleaved-document table
 feeds micro-batches into foreachBatch, which reuses the *batch* operators
-(chunk -> extract -> link -> triples) unchanged and writes each batch to a
-batch_id-keyed edges partition (idempotent overwrite: at-least-once replay
-becomes file-level exactly-once). Alias edges accumulate across batches so
-canonicalization sees the full history — see stream_extract_edges.
+unchanged — the fused chunk + extract pass (`chunk_and_extract`, the one
+run_pipeline and the spark-submit job also run), then link -> entity
+triples — and writes each batch to a batch_id-keyed edges partition
+(idempotent overwrite: at-least-once replay becomes file-level
+exactly-once). Alias edges accumulate across batches so canonicalization
+sees the full history — see stream_extract_edges.
 
 Also provides a watermarked windowed aggregation over the driver `events`
 table shape (the standard late-data pattern) to cover the Structured
@@ -23,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wbkg.io import hadoop_fs
 from wbkg.schemas import DOCUMENTS_INTERLEAVED
 
 
@@ -32,9 +35,7 @@ def _list_state_paths(spark: SparkSession, state_dir: str, upto: int) -> List[st
     would put batch 10 before 9). Replay-safe: a replayed batch ignores any
     state a crashed later attempt may have left behind. Returns [] when the
     dir doesn't exist yet."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(state_dir)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = hadoop_fs(spark, state_dir)
     if not fs.exists(hpath):
         return []
     out = []
@@ -97,8 +98,7 @@ def stream_extract_edges(
 
     Returns the StreamingQuery (availableNow trigger: drains all current
     input then stops — use .awaitTermination())."""
-    from wbkg.chunker import chunk_documents
-    from wbkg.extract import extract_acronyms, extract_mentions
+    from wbkg.extract import acronyms_from_fused, chunk_and_extract, mentions_from_fused
     from wbkg.link import link_mentions
     from wbkg.materialize import entity_triples, union_distinct
     from wbkg.canonicalize import (
@@ -119,10 +119,9 @@ def stream_extract_edges(
     cmap_dir = checkpoint_dir.rstrip("/") + "_cmap_state"
 
     def process_batch(batch_df: DataFrame, batch_id: int):
-        chunks = chunk_documents(batch_df).persist()
-        acronyms = extract_acronyms(chunks).persist()
-        mentions = extract_mentions(chunks, acronyms, pattern_rows).persist()
-        linked = link_mentions(mentions, entity_dict_df).persist()
+        fused = chunk_and_extract(batch_df, pattern_rows).persist()
+        acronyms = acronyms_from_fused(fused)
+        linked = link_mentions(mentions_from_fused(fused), entity_dict_df).persist()
         # this batch's alias edges: written once as lineage (idempotent:
         # replay overwrites), used once below — never re-read in later batches
         batch_alias = build_alias_edges(entity_dict_df, acronyms, linked).persist()
@@ -146,13 +145,10 @@ def stream_extract_edges(
             os.path.join(output_dir, f"batch_id={batch_id}")
         )
         # GC map states older than N-1: batch N+1 replays read only state N
-        jvm = spark._jvm
-        fs = jvm.org.apache.hadoop.fs.Path(cmap_dir).getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
         for old in _list_state_paths(spark, cmap_dir, upto=batch_id - 2):
-            fs.delete(jvm.org.apache.hadoop.fs.Path(old), True)
-        for df in (chunks, acronyms, mentions, linked, batch_alias):
+            fs, hpath = hadoop_fs(spark, old)
+            fs.delete(hpath, True)
+        for df in (fused, linked, batch_alias):
             df.unpersist()
 
     return (
