@@ -1,3 +1,4 @@
+import pytest
 from pyspark.sql import functions as F
 
 from wbkg.materialize import (
@@ -88,17 +89,75 @@ def test_accented_expansion_joins_mention_component(spark):
     assert out["esmf"] == "Q77"  # inherited via the normalized expansion key
 
 
-def test_cc_nonconvergence_warns(spark):
-    import pytest as _pytest
+def _chain_of_12(spark):
+    # a 12-node path: diameter 11, past every iteration bound used below
+    return spark.createDataFrame(
+        [(f"v{i:02d}", f"v{i + 1:02d}", 1) for i in range(11)],
+        "src string, dst string, weight int",
+    )
 
+
+def _cc_exhausted(spark):
     from wbkg.canonicalize import connected_components
 
-    # a chain of 12 has diameter > 2 propagation rounds (max_iter=2 -> 1x2 rounds)
-    edges = spark.createDataFrame(
-        [(f"v{i:02d}", f"v{i+1:02d}") for i in range(12)], "src string, dst string"
-    )
-    with _pytest.warns(RuntimeWarning, match="did not converge"):
-        connected_components(edges, max_iter=2)
+    # max_iter=2 -> one probe of two propagation steps
+    return connected_components(_chain_of_12(spark).select("src", "dst"), max_iter=2)
+
+
+def _lp_exhausted(spark):
+    from wbkg.communities import label_propagation
+
+    # uniform weights: the min label moves one hop per iteration, and the
+    # default LP_MAX_ITER (6) is short of the path's 11 hops
+    return label_propagation(_chain_of_12(spark))
+
+
+def _sssp_exhausted(spark):
+    from wbkg.graph_analytics import sssp
+
+    sources = spark.createDataFrame([("v00",)], "node string")
+    return sssp(_chain_of_12(spark), sources, max_iters=2)
+
+
+def _k_core_exhausted(spark):
+    from wbkg.graph_analytics import k_core
+
+    # the 2-core peels one node off each end per round
+    return k_core(_chain_of_12(spark), k=2, max_iters=2)
+
+
+def _k_truss_exhausted(spark):
+    from wbkg.graph_analytics import k_truss
+
+    # no triangles: the 3-truss drops every edge in round 1, and only a
+    # second round could confirm the empty truss
+    return k_truss(_chain_of_12(spark), k=3, max_iters=1)
+
+
+def _path_closure_exhausted(spark):
+    from wbkg.sparql import _path_closure
+
+    step = _chain_of_12(spark).select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    return _path_closure(step, max_iters=2)
+
+
+@pytest.mark.parametrize(
+    "run",
+    [
+        _cc_exhausted,
+        _lp_exhausted,
+        _sssp_exhausted,
+        _k_core_exhausted,
+        _k_truss_exhausted,
+        _path_closure_exhausted,
+    ],
+    ids=["connected_components", "label_propagation", "sssp", "k_core", "k_truss", "path_closure"],
+)
+def test_cc_nonconvergence_warns(spark, run):
+    """An iterative operator that runs out of iterations warns instead of
+    returning a silently truncated result."""
+    with pytest.warns(RuntimeWarning, match="did not converge"):
+        run(spark)
 
 
 def test_large_alias_graph_takes_distributed_cc(spark, monkeypatch):

@@ -11,11 +11,12 @@ alias edges:
   - per-doc acronyms: entity-key(abbr) <-> entity-key(expansion)
   - linked mentions: entity-key(surface) <-> qid
 
-Connected components run as an iterative DataFrame hash-to-min ("CC on
-MapReduce", Rastogi et al.'s large-star/small-star family): every node adopts
-the minimum id in its neighborhood until a fixed point. Each iteration
-localCheckpoints to truncate lineage; alias clusters are tiny (2-5 nodes) so
-convergence is fast, and the loop is bounded.
+Small alias graphs take a driver union-find. Larger ones run connected
+components as an iterative DataFrame hash-to-min ("CC on MapReduce",
+Rastogi et al.'s large-star/small-star family): propagate_min_label, which
+SCC reuses, makes every node adopt the minimum id in its neighborhood until
+a fixed point, in a wbkg/fixpoint.py loop bounded by max_iter. Alias
+clusters are tiny (2-5 nodes), so convergence is fast.
 
 canonical_map: (member, canonical_id) where canonical_id = lexicographic min
 of the component — deterministic, cluster-stable, and QIDs sort before
@@ -29,80 +30,72 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from wbkg.fixpoint import Fixpoint
+
 MAX_ITER = 20
+# the alias graph is vocabulary-bounded (distinct surfaces + dictionary),
+# not corpus-bounded: orders of magnitude smaller than the mention stream,
+# so the per-iteration shuffles stay narrow
+CC_PARTITIONS = 8
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = MAX_ITER, num_partitions: int | None = None
+def propagate_min_label(
+    fp: Fixpoint, nodes: DataFrame, edges: DataFrame, max_steps: int | None = None
 ) -> DataFrame:
-    """edges (src, dst) -> (member, component) via iterative min-label
-    propagation. Deterministic; component = min member id.
+    """Min-label propagation to a fixpoint -> (node, label): every node of
+    `nodes` (node) starts labelled with its own id, and labels flow along
+    the directed `edges` (src -> dst) until each node holds the minimum id
+    that reaches it. Connected components run it over symmetrized edges;
+    strongly_connected_components runs it forward and backward.
 
-    num_partitions sizes the per-iteration shuffles. The alias graph is
-    vocabulary-bounded (distinct surfaces + dictionary), not corpus-bounded,
-    so it is orders of magnitude smaller than the mention stream — default to
-    a narrow shuffle; pass a larger value for genuinely huge graphs."""
-    if num_partitions is None:
-        num_partitions = 8
-    nodes = (
-        edges.select(F.col("src").alias("member"))
-        .union(edges.select(F.col("dst")))
-        .distinct()
-        .withColumn("component", F.col("member"))
-    )
-    sym = edges.select("src", "dst").union(edges.select(F.col("dst"), F.col("src"))).distinct()
-    sym = sym.repartition(num_partitions, "dst").localCheckpoint()
-    labels = nodes.repartition(num_partitions, "member").localCheckpoint()
+    TWO propagation steps run per convergence probe: the probe costs a job,
+    and a converged step is idempotent, so probing every other step halves
+    the jobs for the same fixpoint. The changed count is an OBSERVED metric
+    of the eager cut that materializes the new labels (fp.changed), so each
+    probe is exactly one job. `max_steps` bounds the steps (None runs to the
+    fixpoint); exhausting it warns through fp."""
+    lbl = fp.cut(nodes.select("node", F.col("node").alias("label")))
 
-    def step(lbl):
-        # candidate label for each node: min over (own, neighbors' labels)
-        neighbor_min = (
-            sym.join(lbl.withColumnRenamed("member", "dst"), "dst")
-            .groupBy(F.col("src").alias("member"))
-            .agg(F.min("component").alias("n_comp"))
+    def step(cur):
+        cand = (
+            edges.join(cur, edges["src"] == cur["node"])
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min("label").alias("_cand"))
         )
-        return lbl.join(neighbor_min, "member", "left").select(
-            "member",
-            F.least(F.col("component"), F.coalesce("n_comp", "component")).alias("component"),
+        return cur.join(cand, "node", "left").select(
+            "node", F.least("label", F.coalesce("_cand", "label")).alias("label")
         )
 
-    # two propagation rounds per materialization/convergence check — halves
-    # the number of jobs (min-label needs diameter rounds; checks are jobs).
-    # The convergence check itself is an OBSERVED metric (accumulator
-    # collected during the checkpoint materialization, VERDICT r03 #7) —
-    # no separate per-iteration count job at all.
-    from pyspark.sql import Observation
-
-    changed = 0
-    for it in range(max(1, max_iter // 2)):
-        obs = Observation(f"cc_changed_{it}")
-        flagged = (
-            step(step(labels))
-            .join(labels.withColumnRenamed("component", "_old"), "member")
-            .withColumn("_chg", (F.col("component") != F.col("_old")).cast("long"))
-        )
-        new_labels = (
-            flagged.observe(obs, F.sum("_chg").alias("changed"))
-            .select("member", "component")
-            .localCheckpoint()
-        )
-        changed = int(obs.get["changed"] or 0)
-        labels = new_labels
+    probes = None if max_steps is None else max(1, max_steps // 2)
+    for _ in fp.rounds(probes):
+        flagged = step(step(lbl)).join(
+            lbl.withColumnRenamed("label", "_old"), "node"
+        ).select("node", "label", (F.col("label") != F.col("_old")).cast("long").alias("_chg"))
+        lbl, changed = fp.changed(lbl, flagged)
         if changed == 0:
             break
-    if changed != 0:
-        # a component whose diameter exceeds max_iter propagation rounds
-        # would otherwise return silently-wrong labels (ADVICE r01)
-        import warnings
+    return lbl
 
-        warnings.warn(
-            f"connected_components did not converge within {max_iter} "
-            "propagation rounds; labels may be unstable — raise max_iter "
-            "(long alias chains need diameter rounds)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels
+
+def connected_components(edges: DataFrame, max_iter: int = MAX_ITER) -> DataFrame:
+    """edges (src, dst) -> (member, component) via min-label propagation
+    over the symmetrized edges, at most `max_iter` propagation steps.
+    Deterministic; component = min member id. A component whose diameter
+    exceeds max_iter warns instead of returning silently-wrong labels."""
+    fp = Fixpoint("connected_components")
+    sym = fp.cut(
+        edges.select("src", "dst")
+        .union(edges.select(F.col("dst"), F.col("src")))
+        .distinct()
+        .repartition(CC_PARTITIONS, "src")
+    )
+    nodes = sym.select(F.col("src").alias("node")).distinct().repartition(
+        CC_PARTITIONS, "node"
+    )
+    labels = fp.result(propagate_min_label(fp, nodes, sym, max_iter))
+    return labels.select(
+        F.col("node").alias("member"), F.col("label").alias("component")
+    )
 
 
 def _normalize_surface_udf():
@@ -193,8 +186,8 @@ def canonical_map_from_edges(edges: DataFrame) -> DataFrame:
         if n_edges <= LOCAL_CC_THRESHOLD
         else connected_components(edges)
     )
-    # both paths have materialized comp (driver collect / eager
-    # localCheckpoint per iteration) — release the alias-edge cache now so
+    # both paths have materialized comp (driver collect / the CC loop's
+    # materialized result) — release the alias-edge cache now so
     # repeated pipeline runs in one session don't accumulate blocks
     edges.unpersist()
     # representative: min qid:: member if any, else min member

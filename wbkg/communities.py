@@ -22,10 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from wbkg.fixpoint import Fixpoint
 from wbkg.materialize import EX, SCHEMA, RDF_TYPE, _lit_edges, _uri, _uri_edges
 
 DEFAULT_ENTITY_CHUNK_CAP = 200
 LP_MAX_ITER = 6
+LP_PARTITIONS = 32
 
 
 def cooccurrence_edges(
@@ -57,72 +59,67 @@ def cooccurrence_edges(
     )
 
 
-def label_propagation(
-    edges: DataFrame, max_iter: int = LP_MAX_ITER, num_partitions: int = 32
-) -> DataFrame:
-    """Deterministic synchronous weighted label propagation.
+def _propagate_labels(fp: Fixpoint, edges: DataFrame, max_iter: int) -> DataFrame:
+    """Deterministic synchronous weighted label propagation in fp's loop
+    -> (node, label: the converged min-label, a member chunk_id).
 
-    Each node adopts the label with the highest incident weight sum
-    (tie-break: smallest label). -> (chunk_id, community_id: long)."""
-    sym = (
+    MONOTONE: each node finds the label with the highest incident-weight
+    sum among its neighbors (tie: smallest label) and adopts it ONLY if it
+    is smaller than its current label. Labels only decrease, so the
+    iteration provably converges (no synchronous-LP oscillation);
+    weight-dominance still decides membership, so a weak bridge edge cannot
+    pull a node out of its strongly-connected cluster. "Changed" is "new
+    label strictly smaller", observed by fp.changed (one job per
+    iteration); exhausting max_iter warns through fp."""
+    sym = fp.cut(
         edges.select("src", "dst", "weight")
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight"))
-        .repartition(num_partitions, "src")
-        .localCheckpoint()
+        .repartition(LP_PARTITIONS, "src")
     )
-    labels = (
+    labels = fp.cut(
         sym.select(F.col("src").alias("node")).distinct().withColumn("label", F.col("node"))
-    ).localCheckpoint()
-
-    # MONOTONE weighted label propagation: each node finds the label with the
-    # highest incident-weight sum among its neighbors (tie: smallest label)
-    # and adopts it ONLY if it is smaller than its current label. Labels only
-    # decrease, so the iteration provably converges (no synchronous-LP
-    # oscillation); weight-dominance still decides membership, so a weak
-    # bridge edge cannot pull a node out of its strongly-connected cluster.
-    for it in range(max_iter):
+    )
+    pick = Window.partitionBy("node").orderBy(F.desc("w"), F.asc("label"))
+    for _ in fp.rounds(max_iter):
         neigh = (
             sym.join(labels.withColumnRenamed("node", "dst"), "dst")
             .groupBy(F.col("src").alias("node"), "label")
             .agg(F.sum("weight").alias("w"))
         )
-        pick = Window.partitionBy("node").orderBy(F.desc("w"), F.asc("label"))
         candidate = (
             neigh.withColumn("_rn", F.row_number().over(pick))
             .filter("_rn = 1")
             .select("node", F.col("label").alias("new_label"))
         )
-        # labels only decrease, so changed == "new label strictly smaller";
-        # the count rides the checkpoint materialization as an OBSERVED
-        # metric (accumulator) — no separate per-iteration count job
-        # (VERDICT r03 #7)
-        from pyspark.sql import Observation
-
-        obs = Observation(f"lp_changed_{it}")
         new_col = F.least(F.col("label"), F.coalesce("new_label", "label"))
         flagged = labels.join(candidate, "node", "left").select(
             "node",
-            new_col.alias("_new"),
+            new_col.alias("label"),
             (new_col < F.col("label")).cast("long").alias("_chg"),
         )
-        new_labels = (
-            flagged.observe(obs, F.sum("_chg").alias("changed"))
-            .select("node", F.col("_new").alias("label"))
-            .localCheckpoint()
-        )
-        changed = int(obs.get["changed"] or 0)
-        labels = new_labels
+        labels, changed = fp.changed(labels, flagged)
         if changed == 0:
             break
+    return labels
 
+
+def _as_communities(labels: DataFrame) -> DataFrame:
     # structural id: the converged min-label (a member chunk_id) IS the
     # community id — injective by construction, no hash-collision risk
     # (ADVICE r02: a cross-parent xxhash64 collision could silently merge
     # two communities and break the max_cluster_size bound)
     return labels.select(
-        F.col("node").alias("chunk_id"),
-        F.col("label").alias("community_id"),
+        F.col("node").alias("chunk_id"), F.col("label").alias("community_id")
     )
+
+
+def label_propagation(edges: DataFrame, max_iter: int = LP_MAX_ITER) -> DataFrame:
+    """Deterministic synchronous weighted label propagation.
+
+    Each node adopts the label with the highest incident weight sum
+    (tie-break: smallest label). -> (chunk_id, community_id: long)."""
+    fp = Fixpoint("label_propagation")
+    return _as_communities(fp.result(_propagate_labels(fp, edges, max_iter)))
 
 
 def _ntile_split(mem: DataFrame, max_cluster_size: int) -> DataFrame:
@@ -147,7 +144,6 @@ def hierarchical_communities(
     edges: DataFrame,
     max_cluster_size: int = 50,
     max_levels: int = 4,
-    num_partitions: int = 32,
 ) -> DataFrame:
     """Hierarchical community detection with a hard cluster-size bound —
     the deterministic surrogate for the reference's
@@ -168,9 +164,9 @@ def hierarchical_communities(
     -> (chunk_id, level, community_id); a chunk appears once per level at
     which its community was (re)assigned. Use final_communities() for the
     leaf assignment."""
-    labels = label_propagation(edges, num_partitions=num_partitions)
-    out = labels.withColumn("level", F.lit(0))
-    cur = labels.localCheckpoint()
+    fp = Fixpoint("hierarchical_communities label propagation")
+    cur = _as_communities(_propagate_labels(fp, edges, LP_MAX_ITER))
+    out = cur.withColumn("level", F.lit(0))
 
     for level in range(1, max_levels + 1):
         sizes = cur.groupBy("community_id").agg(F.count("*").alias("sz"))
@@ -203,9 +199,9 @@ def hierarchical_communities(
             refine_mem = mem.join(varying.select("parent"), "parent", "left_semi")
             ntile_mem = mem.join(varying.select("parent"), "parent", "left_anti")
 
-            sub = label_propagation(kept, num_partitions=num_partitions).withColumnRenamed(
-                "community_id", "sub_label"
-            )
+            sub = _as_communities(
+                _propagate_labels(fp, kept, LP_MAX_ITER)
+            ).withColumnRenamed("community_id", "sub_label")
             singleton = F.concat_ws("#", "parent", "chunk_id")
             refined0 = refine_mem.join(sub, "chunk_id", "left").select(
                 "chunk_id", "parent", F.coalesce("sub_label", singleton).alias("sub_label")
@@ -229,11 +225,11 @@ def hierarchical_communities(
             )
             refined = split_ok.unionByName(_ntile_split(ntile_all, max_cluster_size))
 
-        refined = refined.localCheckpoint()
+        refined = fp.cut(refined, eager=True)
         out = out.unionByName(refined.withColumn("level", F.lit(level)))
         cur = refined
 
-    return out.select("chunk_id", "level", "community_id")
+    return fp.result(out.select("chunk_id", "level", "community_id"))
 
 
 def final_communities(hier: DataFrame) -> DataFrame:

@@ -11,10 +11,10 @@ graph algorithms expressed as DataFrame plans:
   aggregate into integer weights, like GraphX; an explicit weight column is
   honored). Per round: one equi-join of ranks against the weighted edge
   list, one partial-aggregated groupBy sum — two shuffles, both on the
-  node key, so a cluster co-partitions them; localCheckpoint every
-  `checkpoint_every` rounds truncates lineage exactly like the CC/LP loops
-  (wbkg/canonicalize.py). Dangling mass is redistributed uniformly (the
-  standard correction) so ranks stay a probability distribution.
+  node key, so a cluster co-partitions them. Dangling mass is
+  redistributed uniformly (the standard correction) so ranks stay a
+  probability distribution. pagerank and personalized_pagerank share one
+  power-iteration body.
 - triangle_count: degree-ordered Schank–Wagner (compact-forward): orient
   each undirected edge from its lower-(degree, id) endpoint, collect each
   source's out-neighbor array, and intersect the two endpoint arrays per
@@ -29,6 +29,9 @@ graph algorithms expressed as DataFrame plans:
   (the Pregel pattern); per-round work is proportional to the frontier's
   out-edges, not the graph.
 
+Every iterative operator here runs its loop through wbkg/fixpoint.py
+(lineage cuts, probes, release, the exhaustion warning).
+
 At 100 TB: ranks/degrees shuffle (node_id, double) pairs only — never
 payloads; the triangle join's quadratic term is bounded by the max degree,
 so callers cap hub degrees first (same hub-cap primitive as
@@ -39,6 +42,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from wbkg.canonicalize import propagate_min_label
+from wbkg.fixpoint import Fixpoint
+
+# the fixed-count power iterations (pagerank, personalized_pagerank, katz)
+# cut their score table every other round
+POWER_CUT_EVERY = 2
+# the frontier loops (bfs_distances, harmonic_centrality, sssp) cut their
+# growing settled table every fourth round
+SETTLED_CUT_EVERY = 4
+
 
 def pagerank(
     edges: DataFrame,
@@ -46,7 +59,6 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 2,
     weight: str | None = None,
 ) -> DataFrame:
     """Power-iteration PageRank over a directed edge list -> (node, rank).
@@ -62,43 +74,75 @@ def pagerank(
     (rows with the same (src, dst) sum). On a simple graph every weight is
     1 and the result is float-identical to unweighted rank/outdeg.
 
-    Fixed iteration count (the driver-friendly contract — no per-round
-    convergence job); every `checkpoint_every` rounds the rank table is
-    localCheckpoint-ed so lineage stays flat. Returns ranks summing to 1."""
-    w_col = F.col(weight).cast("double") if weight else F.lit(1.0)
-    # the weighted edge list and out-degrees are STATIC across iterations;
-    # checkpoint both once so no iteration's lineage re-aggregates the raw
-    # edge table (previously every checkpoint window re-ran the groupBy
-    # from source — the dominant cost on multi-million-edge graphs)
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w_col.alias("w"))
-        .groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
-        .localCheckpoint(eager=False)
+    personalized_pagerank with every node a seed: the teleport indicator is
+    the literal 1.0 over the node table (no seed join, no seed count), and
+    the power iteration is the shared _power_iteration body. Fixed
+    iteration count (the driver-friendly contract — no per-round
+    convergence job). Returns ranks summing to 1."""
+    fp = Fixpoint("pagerank")
+    e = _weighted_edges(fp, edges, src, dst, weight)
+    nodes, n_nodes = fp.count(_nodes(e))
+    return _power_iteration(
+        fp, e, nodes.withColumn("is_seed", F.lit(1.0)), n_nodes, iterations, damping
     )
-    nodes = (
+
+
+def _nodes(e: DataFrame) -> DataFrame:
+    """(node): every endpoint of an (src, dst) edge list, once."""
+    return (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint()
-    )
-    n_nodes = nodes.count()
-    out_deg = (
-        e.groupBy("src").agg(F.sum("w").alias("out_w")).localCheckpoint(eager=False)
     )
 
-    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-    base = (1.0 - damping) / n_nodes
+
+def _weighted_edges(
+    fp: Fixpoint, edges: DataFrame, src: str, dst: str, weight: str | None
+) -> DataFrame:
+    """(src, dst, w): parallel edges summed into one weighted edge. STATIC
+    across iterations, so it is cut once and no iteration's lineage
+    re-aggregates the raw edge table."""
+    w_col = F.col(weight).cast("double") if weight else F.lit(1.0)
+    return fp.cut(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w_col.alias("w"))
+        .groupBy("src", "dst")
+        .agg(F.sum("w").alias("w"))
+    )
+
+
+def _power_iteration(
+    fp: Fixpoint,
+    e: DataFrame,
+    nodes: DataFrame,
+    n_teleport: int,
+    iterations: int,
+    damping: float,
+) -> DataFrame:
+    """The PageRank power iteration shared by pagerank and
+    personalized_pagerank -> (node, rank). `nodes` is (node, is_seed) with
+    is_seed the 1.0/0.0 teleport indicator; `n_teleport` counts the
+    teleport set. Initial mass 1/n on the teleport set; dangling mass
+    restarts there too, so mass is conserved.
+
+    Per round: one join of ranks against the out-degrees and one
+    partial-aggregated groupBy sum against the weighted edges — two
+    shuffles, both on the node key, so a cluster co-partitions them. The
+    rank table is cut LAZILY every POWER_CUT_EVERY rounds (bounded plan,
+    no per-round job); the last round's cut is eager, so the whole chain
+    runs as one job, and fp.result then releases every intermediate."""
+    out_deg = fp.cut(e.groupBy("src").agg(F.sum("w").alias("out_w")))
+    ranks = nodes.select("node", "is_seed", (F.col("is_seed") / n_teleport).alias("rank"))
+    base = (1.0 - damping) / n_teleport
     for i in range(iterations):
-        # checkpointed (lazily) BEFORE the dangling-mass scalar: the
-        # scalar's broadcast sub-job then materializes exactly one join
-        # from persisted ranks, and the contribs chain reuses the same
-        # blocks — without this every iteration's broadcast re-executed
-        # the chain since the last checkpoint
-        with_deg = (
-            ranks.join(out_deg, ranks["node"] == out_deg["src"], "left")
-            .select("node", "rank", "out_w")
-            .localCheckpoint(eager=False)
+        # cut (lazily) BEFORE the dangling-mass scalar: the scalar's
+        # broadcast sub-job then materializes exactly one join from
+        # persisted ranks, and the contribs chain reuses the same blocks —
+        # without it every round's broadcast re-executed the chain since
+        # the last cut
+        with_deg = fp.cut(
+            ranks.join(out_deg, ranks["node"] == out_deg["src"], "left").select(
+                "node", "rank", "out_w"
+            )
         )
         # dangling nodes (no out-edges) leak their mass; fold the scalar
         # back in as a one-row broadcast cross join
@@ -120,23 +164,21 @@ def pagerank(
             .crossJoin(F.broadcast(dang))
             .select(
                 "node",
+                "is_seed",
                 (
-                    F.lit(base)
+                    F.lit(base) * F.col("is_seed")
                     + F.lit(damping)
                     * (
                         F.coalesce(F.col("in_sum"), F.lit(0.0))
-                        + F.col("dang") / n_nodes
+                        + F.col("dang") / n_teleport * F.col("is_seed")
                     )
                 ).alias("rank"),
             )
         )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            # LAZY checkpoint: the logical plan is truncated immediately
-            # (bounded plan size) but no job launches — the caller's first
-            # action executes the whole iteration chain as ONE job, and
-            # the persisted blocks serve every later action
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks
+        last = i == iterations - 1
+        if (i + 1) % POWER_CUT_EVERY == 0 or last:
+            ranks = fp.cut(ranks, eager=last)
+    return fp.result(ranks).select("node", "rank")
 
 
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -157,7 +199,15 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     for the closing semi-join; here the only heavy exchange ships each
     edge's source adjacency array once (Σ outdeg² array ELEMENTS, no
     per-wedge row overhead, no second wedge-sized shuffle)."""
-    und = (
+    _, pairs = _degree_ordered(_canonical_edges(edges, src, dst))
+    return pairs.select(F.size(F.array_intersect("nb", "nb_v")).alias("t")).agg(
+        F.coalesce(F.sum("t"), F.lit(0)).cast("bigint").alias("n_triangles")
+    )
+
+
+def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """(a, b) with a < b: the undirected simple graph, self-loops dropped."""
+    return (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
             F.greatest(F.col(src), F.col(dst)).alias("b"),
@@ -165,16 +215,23 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
+
+
+def _degree_ordered(und: DataFrame):
+    """Schank–Wagner orientation of canonical (a, b) edges -> (deg, pairs):
+    node degrees (node, deg), and per edge oriented from its lower-(degree,
+    id) endpoint u to v, the row (v, u, nb, nb_v) carrying both endpoints'
+    COLLECTED out-neighbor arrays. Out-degrees are O(sqrt(m))-bounded, and
+    N+(u) ∩ N+(v) holds each triangle through (u, v) exactly once."""
     deg = (
         und.select(F.col("a").alias("node"))
         .unionByName(und.select(F.col("b").alias("node")))
         .groupBy("node")
         .agg(F.count("*").alias("deg"))
     )
-    ann = (
-        und.join(deg.withColumnRenamed("node", "a").withColumnRenamed("deg", "deg_a"), "a")
-        .join(deg.withColumnRenamed("node", "b").withColumnRenamed("deg", "deg_b"), "b")
-    )
+    ann = und.join(
+        deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a")), "a"
+    ).join(deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b")), "b")
     a_first = (F.col("deg_a") < F.col("deg_b")) | (
         (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
     )
@@ -183,16 +240,10 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
     )
     adj = oriented.groupBy("u").agg(F.collect_list("v").alias("nb"))
-    tri_per_edge = (
-        oriented.join(adj, "u")
-        .join(
-            adj.select(F.col("u").alias("v"), F.col("nb").alias("nb_v")), "v"
-        )
-        .select(F.size(F.array_intersect("nb", "nb_v")).alias("t"))
+    pairs = oriented.join(adj, "u").join(
+        adj.select(F.col("u").alias("v"), F.col("nb").alias("nb_v")), "v"
     )
-    return tri_per_edge.agg(
-        F.coalesce(F.sum("t"), F.lit(0)).cast("bigint").alias("n_triangles")
-    )
+    return deg, pairs
 
 
 def bfs_distances(
@@ -202,56 +253,79 @@ def bfs_distances(
     src: str = "src",
     dst: str = "dst",
     directed: bool = True,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Multi-source BFS hop distance -> (node, dist): for every node
     reachable from the source set within `max_hops`, the hop count to the
     NEAREST source (sources themselves at dist 0). Unreachable nodes are
-    absent — callers outer-join if they want nulls.
-
-    Frontier expansion (the Pregel pattern as DataFrame ops): each round
-    joins only the FRONTIER — nodes first settled last round — against the
-    edge list and anti-joins the settled set, so per-round shuffle volume
-    is O(frontier out-edges), never O(V): on a 100-TB graph the early
-    rounds touch a sliver of the edge table and Catalyst broadcasts the
-    frontier while it is small. The frontier is localCheckpoint-ed every
-    round (its emptiness is the termination test, so it is materialized
-    anyway); the growing settled table is checkpointed every
-    `checkpoint_every` rounds to keep lineage flat. `sources` is a
+    absent — callers outer-join if they want nulls. `sources` is a
     1-column (node) DataFrame; `directed=False` expands along reversed
-    edges too."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    if not directed:
-        e = (
-            e.unionByName(
-                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-    settled = (
+    edges too. The frontier expansion is _expand_frontier's, keyed on the
+    node alone."""
+    fp = Fixpoint("bfs_distances")
+    start = (
         sources.select(F.col(sources.columns[0]).alias("node"))
         .distinct()
         .select("node", F.lit(0).alias("dist"))
-        .localCheckpoint(eager=False)
     )
+    e = _hop_edges(fp, edges, src, dst, directed)
+    return fp.result(_expand_frontier(fp, e, start, ["node"], max_hops))
+
+
+def _hop_edges(
+    fp: Fixpoint, edges: DataFrame, src: str, dst: str, directed: bool
+) -> DataFrame:
+    """Distinct (src, dst) hops; undirected adds the reversed edges and cuts
+    the symmetrized table once."""
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
+    if directed:
+        return e
+    return fp.cut(_symmetric(e))
+
+
+def _loop_free(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    return edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).filter(
+        F.col("src") != F.col("dst")
+    )
+
+
+def _symmetric(e: DataFrame) -> DataFrame:
+    """(src, dst) edges in both directions, once each."""
+    return e.unionByName(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct()
+
+
+def _expand_frontier(
+    fp: Fixpoint, e: DataFrame, start: DataFrame, key: list, max_hops: int
+) -> DataFrame:
+    """Labeled BFS (the Pregel pattern as DataFrame ops) -> the settled
+    rows (*key, dist). `start` holds the dist-0 rows; `key` names a settled
+    row — ["node"] for nearest-source BFS, ["seed", "node"] to keep each
+    seed's distances apart — and ends with "node".
+
+    Each round joins only the FRONTIER — rows first settled last round —
+    against the edge list and anti-joins the settled set on the key, so
+    per-round shuffle volume is O(frontier out-edges), never O(V): on a
+    100-TB graph the early rounds touch a sliver of the edge table and
+    Catalyst broadcasts the frontier while it is small. The frontier's
+    emptiness is the per-round probe (fp.count: one job that also
+    materializes its cut); the growing settled table is cut every
+    SETTLED_CUT_EVERY rounds to keep lineage flat."""
+    settled = fp.cut(start)
     frontier = settled
     for hop in range(1, max_hops + 1):
-        # lazy checkpoint + the emptiness probe in ONE job per hop (the
-        # r06 eager checkpoint cost a second job per hop)
-        nxt = (
+        nxt, n = fp.count(
             frontier.join(e, frontier["node"] == e["src"])
-            .select(F.col("dst").alias("node"))
+            .select(*key[:-1], F.col("dst").alias("node"))
             .distinct()
-            .join(settled, "node", "left_anti")
-            .select("node", F.lit(hop).alias("dist"))
-            .localCheckpoint(eager=False)
+            .join(settled, key, "left_anti")
+            .select(*key, F.lit(hop).alias("dist"))
         )
-        if nxt.isEmpty():
+        if n == 0:
             break
         settled = settled.unionByName(nxt)
-        if hop % checkpoint_every == 0:
-            settled = settled.localCheckpoint(eager=False)
+        if hop % SETTLED_CUT_EVERY == 0:
+            settled = fp.cut(settled)
         frontier = nxt
     return settled
 
@@ -352,7 +426,6 @@ def sssp(
     dst: str = "dst",
     weight: str = "weight",
     max_iters: int = 30,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Multi-source single-source-shortest-path (weighted BFS
     generalization) -> (node, dist): minimum total edge weight from the
@@ -365,42 +438,42 @@ def sssp(
     last round against the edge list, offers dist+w to their neighbors,
     and keeps offers strictly below the incumbent. Per-round shuffle
     volume is O(frontier out-edges) + one partial-agg min per touched
-    node — never O(V). Terminates when no node improves (checked on the
-    localCheckpoint-ed frontier, which is materialized anyway) or at
-    max_iters, whichever first."""
+    node — never O(V). Terminates when no node improves (the emptiness
+    probe on the frontier); exhausting max_iters first warns
+    that the distances may not be final."""
+    fp = Fixpoint("sssp")
     e = edges.select(
         F.col(src).alias("src"),
         F.col(dst).alias("dst"),
         F.col(weight).cast("double").alias("w"),
     )
-    dist = sources.select(
-        F.col(sources.columns[0]).alias("node"), F.lit(0.0).alias("dist")
-    ).localCheckpoint(eager=False)
+    dist = fp.cut(
+        sources.select(F.col(sources.columns[0]).alias("node"), F.lit(0.0).alias("dist"))
+    )
     frontier = dist
-    for it in range(max_iters):
+    for it in fp.rounds(max_iters):
         offers = (
             frontier.join(e, frontier["node"] == e["src"])
             .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("cand"))
             .groupBy("node")
             .agg(F.min("cand").alias("cand"))
         )
-        improved = (
+        improved, n = fp.count(
             offers.join(dist, "node", "left")
             .filter(F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
             .select("node", F.col("cand").alias("dist"))
-            .localCheckpoint(eager=False)  # one probe job per round
         )
-        if improved.isEmpty():
+        if n == 0:
             break
         dist = (
             dist.unionByName(improved)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-        if it % checkpoint_every == checkpoint_every - 1:
-            dist = dist.localCheckpoint(eager=False)
+        if it % SETTLED_CUT_EVERY == SETTLED_CUT_EVERY - 1:
+            dist = fp.cut(dist)
         frontier = improved
-    return dist
+    return fp.result(dist)
 
 
 def k_core(
@@ -409,9 +482,6 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
     max_iters: int = 100,
-    checkpoint_every: int = 2,  # unused since r07 (every round is one
-    #                             lazily-checkpointed job); kept for API
-    #                             compatibility
 ) -> DataFrame:
     """k-core -> (node, degree): the maximal subgraph in which every node
     has degree >= k, with each surviving node's degree INSIDE the core.
@@ -424,56 +494,40 @@ def k_core(
     deduped, self-loops dropped, so degree = distinct-neighbor count.
 
     Plan: INCREMENTAL peel (the textbook delta formulation). The
-    symmetrized edge list is checkpointed ONCE and never rewritten; the
-    loop maintains only the node-sized degree table. Per round: nodes
-    under k drop; each dropped node decrements its still-alive neighbors
-    by one partial-agg count over the static edge list semi-joined
-    against the (small, AQE-broadcast) drop set. deg_{t+1}(v) =
-    deg_t(v) - |N(v) ∩ drop_t| is exactly the degree of v in the peeled
-    subgraph, so the round-by-round state — and the fixpoint — is
-    identical to the r06 re-materialize-the-edges peel, which rebuilt
-    and re-persisted the full edge list every round. Each round is ONE
-    job (lazy checkpoints; the emptiness probe on the drop set
-    materializes the new degree table). Peel depth is the graph's
-    degeneracy-ordering depth, not O(V) — tens of rounds on power-law
-    graphs regardless of scale."""
-    e0 = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-    )
-    e = (
-        e0.unionByName(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        e.groupBy(F.col("src").alias("node"))
-        .agg(F.count("*").alias("_deg"))
-        .localCheckpoint(eager=False)
-    )
-    for it in range(max_iters):
-        drop = deg.filter(F.col("_deg") < k).select("node").localCheckpoint(
-            eager=False
-        )
-        if drop.isEmpty():
+    symmetrized edge list is cut ONCE and never rewritten; the loop
+    maintains only the node-sized degree table. Per round: nodes under k
+    drop; each dropped node decrements its still-alive neighbors by one
+    partial-agg count over the static edge list semi-joined against the
+    (small, AQE-broadcast) drop set. deg_{t+1}(v) = deg_t(v) -
+    |N(v) ∩ drop_t| is exactly the degree of v in the peeled subgraph, so
+    the round-by-round state — and the fixpoint — is identical to the r06
+    re-materialize-the-edges peel, which rebuilt and re-persisted the full
+    edge list every round. Each round is ONE job (the emptiness probe
+    that cuts the drop set also materializes the lazily-cut degree table). Peel depth
+    is the graph's degeneracy-ordering depth, not O(V) — tens of rounds on
+    power-law graphs regardless of scale; exhausting max_iters warns that
+    the core may still hold nodes under k."""
+    fp = Fixpoint("k_core")
+    e = fp.cut(_symmetric(_loop_free(edges, src, dst)))
+    deg = fp.cut(e.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("_deg")))
+    for _ in fp.rounds(max_iters):
+        drop, n = fp.count(deg.filter(F.col("_deg") < k).select("node"))
+        if n == 0:
             break
         dec = (
             e.join(drop.withColumnRenamed("node", "src"), "src", "left_semi")
             .groupBy(F.col("dst").alias("node"))
             .agg(F.count("*").alias("_dec"))
         )
-        deg = (
+        deg = fp.cut(
             deg.join(drop, "node", "left_anti")
             .join(dec, "node", "left")
             .select(
                 "node",
                 (F.col("_deg") - F.coalesce("_dec", F.lit(0))).alias("_deg"),
             )
-            .localCheckpoint(eager=False)
         )
-    return deg.select("node", F.col("_deg").cast("int").alias("degree"))
+    return fp.result(deg.select("node", F.col("_deg").cast("int").alias("degree")))
 
 
 def modularity(
@@ -504,13 +558,7 @@ def modularity(
     Nodes absent from the community map form singleton communities of
     their own (labelled by the node id) — standard convention, keeps Q
     well-defined on partial partitions."""
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-    )
-    und = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
+    und = _symmetric(_loop_free(edges, src, dst))
     cmap = communities.select(
         F.col(node).alias("_n"), F.col(community).cast("string").alias("_c")
     )
@@ -578,13 +626,7 @@ def link_prediction(
     of 1/ln(integer) terms, rounded to 8 (the shared ulp convention);
     top_k (if set) cuts on the total order (adamic_adar DESC, common
     DESC, u, v) so the LIMIT is engine-independent."""
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-    )
-    und = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
+    und = _symmetric(_loop_free(edges, src, dst))
     deg = und.groupBy(F.col("src").alias("center")).agg(
         F.count("*").alias("cdeg")
     )
@@ -639,7 +681,6 @@ def k_truss(
     src: str = "src",
     dst: str = "dst",
     max_iters: int = 50,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """k-truss -> (a, b, support): the maximal subgraph in which every
     edge participates in >= k-2 triangles (within the truss), with each
@@ -658,40 +699,18 @@ def k_truss(
     triangle materializes ONCE, never Σ outdeg² wedge rows), then credit
     all three canonical edges of each triangle (one explode of a
     3-element array) and fold support in one partial-agg groupBy. Edges
-    under k-2 drop; repeat until the edge count is stable. The fixpoint
-    count rides a LAZY localCheckpoint every round (one job per round,
-    nothing recomputed). Peel depth is bounded by the triangle-density
-    profile, not V — same argument as k_core. If the loop exhausts
-    max_iters without converging, support is recomputed on the FINAL
-    edge set so reported supports never count triangles through removed
-    edges."""
+    under k-2 drop; repeat until the edge count is stable. The observed
+    count of the surviving edges is the one probe job per round; the
+    supports are cut in the same job, so the final join reads them instead of recounting
+    triangles. Peel depth is bounded by the triangle-density profile, not
+    V — same argument as k_core. If the loop exhausts max_iters without
+    converging it warns, and support is recomputed on the FINAL edge set
+    so reported supports never count triangles through removed edges."""
 
     def _support(cur: DataFrame) -> DataFrame:
-        deg = (
-            cur.select(F.col("a").alias("node"))
-            .unionByName(cur.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("deg"))
-        )
-        ann = cur.join(
-            deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a")), "a"
-        ).join(
-            deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b")), "b"
-        )
-        a_first = (F.col("deg_a") < F.col("deg_b")) | (
-            (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
-        )
-        oriented = ann.select(
-            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        )
-        adj = oriented.groupBy("u").agg(F.collect_list("v").alias("nb"))
-        tris = (
-            oriented.join(adj, "u")
-            .join(adj.select(F.col("u").alias("v"), F.col("nb").alias("nb_v")), "v")
-            .select(
-                "u", "v", F.explode(F.array_intersect("nb", "nb_v")).alias("w")
-            )
+        _, pairs = _degree_ordered(cur)
+        tris = pairs.select(
+            "u", "v", F.explode(F.array_intersect("nb", "nb_v")).alias("w")
         )
         credit = tris.select(
             F.explode(
@@ -712,38 +731,28 @@ def k_truss(
             F.count("*").cast("int").alias("support")
         )
 
-    cur = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
+    fp = Fixpoint("k_truss")
+    cur, n_edges = fp.count(_canonical_edges(edges, src, dst))
+    for _ in fp.rounds(max_iters):
+        support = fp.cut(_support(cur))
+        nxt, n_next = fp.count(
+            cur.join(
+                support.filter(F.col("support") >= k - 2).select("a", "b"),
+                ["a", "b"],
+                "left_semi",
+            )
         )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n_edges = cur.count()
-    support = None
-    converged = n_edges == 0
-    for it in range(max_iters):
-        support = _support(cur)
-        nxt = cur.join(
-            support.filter(F.col("support") >= k - 2).select("a", "b"),
-            ["a", "b"],
-            "left_semi",
-        ).localCheckpoint(eager=False)
-        n_next = nxt.count()
         if n_next == n_edges:
-            cur = nxt
-            converged = True
             break
         cur, n_edges = nxt, n_next
-    if support is None or not converged:
-        # max_iters exhausted (or empty input): supports from the last
-        # in-loop computation could count triangles through edges no
-        # longer present — recompute on the final edge set
+    else:
+        # supports from the last in-loop round could count triangles
+        # through edges no longer present — recompute on the final edge set
         support = _support(cur)
-    return cur.join(support, ["a", "b"], "left").select(
-        "a", "b", F.coalesce("support", F.lit(0)).cast("int").alias("support")
+    return fp.result(
+        cur.join(support, ["a", "b"], "left").select(
+            "a", "b", F.coalesce("support", F.lit(0)).cast("int").alias("support")
+        )
     )
 
 
@@ -752,7 +761,6 @@ def hits(
     iterations: int = 10,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """HITS hubs & authorities (Kleinberg) -> (node, authority, hub),
     L2-normalized each half-step, both rounded to 8 — the OTHER classic
@@ -768,44 +776,32 @@ def hits(
     nothing to the sums OR the norms, so the loop carries only the
     NONZERO rows and the all-node zero-fill happens once at the end —
     that drops two outer joins per iteration from the r06 shape.
-    Checkpoints are lazy (plan truncated, no per-window job; the
-    caller's first action runs the whole chain once). The norm's sum
+    Cuts are lazy (plan truncated, no per-round job); fp.result runs the
+    whole chain once and releases the intermediates. The norm's sum
     order is engine/partition dependent — the shared round-8 convention
     absorbs it (ulp-scale per round, linear growth across rounds)."""
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    fp = Fixpoint("hits")
+    e = fp.cut(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct())
+    nodes = fp.cut(_nodes(e))
+    if iterations <= 0:
+        return fp.result(
+            nodes.select("node", F.lit(1.0).alias("authority"), F.lit(1.0).alias("hub"))
+        )
     # hub scores start at 1.0 on every node; only rows that stay nonzero
     # matter inside the loop (see docstring)
     hub = nodes.select("node", F.lit(1.0).alias("hub"))
-    if iterations <= 0:
-        return nodes.select(
-            "node",
-            F.lit(1.0).alias("authority"),
-            F.lit(1.0).alias("hub"),
-        )
-    auth = None
     for i in range(iterations):
-        # the RAW half-step sums are checkpointed (lazily) BEFORE the norm
-        # scalar: the norm's broadcast sub-job then materializes exactly
-        # one join+agg from persisted input, and the normalized scores are
-        # a map-side projection over the same persisted blocks — without
+        # the RAW half-step sums are cut (lazily) BEFORE the norm scalar:
+        # the norm's broadcast sub-job then materializes exactly one
+        # join+agg from persisted input, and the normalized scores are a
+        # map-side projection over the same persisted blocks — without
         # this, every norm broadcast re-executed the whole chain since the
-        # last checkpoint (quadratic within the window; profiled as ~10s
-        # of scheduler-and-recompute on a 25-node fixture)
-        raw_a = (
+        # last cut (quadratic within the window; profiled as ~10s of
+        # scheduler-and-recompute on a 25-node fixture)
+        raw_a = fp.cut(
             hub.join(e, hub["node"] == e["src"])
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("hub").alias("ra"))
-            .localCheckpoint(eager=False)
         )
         norm_a = raw_a.agg(F.sqrt(F.sum(F.col("ra") * F.col("ra"))).alias("_n"))
         auth = raw_a.crossJoin(F.broadcast(norm_a)).select(
@@ -814,11 +810,10 @@ def hits(
             .otherwise(F.lit(0.0))
             .alias("authority"),
         )
-        raw_h = (
+        raw_h = fp.cut(
             auth.join(e, auth["node"] == e["dst"])
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("authority").alias("rh"))
-            .localCheckpoint(eager=False)
         )
         norm_h = raw_h.agg(F.sqrt(F.sum(F.col("rh") * F.col("rh"))).alias("_n"))
         hub = raw_h.crossJoin(F.broadcast(norm_h)).select(
@@ -827,7 +822,7 @@ def hits(
             .otherwise(F.lit(0.0))
             .alias("hub"),
         )
-    return (
+    return fp.result(
         nodes.join(auth, "node", "left")
         .join(hub, "node", "left")
         .select(
@@ -859,7 +854,7 @@ def random_walks(
     dst) — a deterministic total order.
 
     Plan: the slotted neighbor table and out-degrees build once (one
-    window + one partial agg on src, co-partitioned) and localCheckpoint;
+    window + one partial agg on src, co-partitioned) and are cut;
     each step is an equi-join of the live frontier on (node, slot) —
     the slot is computed BEFORE the join so there is no outdeg fan-out —
     shuffle volume O(live walks), never O(E). Skew bound: walks are keyed
@@ -872,12 +867,12 @@ def random_walks(
         # sequence(0, walks_per_node-1) would COUNT DOWN for 0 (Spark's
         # default step is -1 when start > stop) — reject instead
         raise ValueError("walk_len and walks_per_node must be >= 1")
+    fp = Fixpoint("random_walks")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     w = Window.partitionBy("src").orderBy("dst")
-    nbr = (
+    nbr = fp.cut(
         e.withColumn("rn", (F.row_number().over(w) - 1).cast("long"))
         .withColumn("outdeg", F.count("*").over(Window.partitionBy("src")))
-        .localCheckpoint(eager=False)
     )
     starts = (
         nbr.select("src")
@@ -894,16 +889,12 @@ def random_walks(
             F.col("node"),
         )
     )
-    deg = (
-        nbr.select(F.col("src").alias("node"), "outdeg")
-        .distinct()
-        .localCheckpoint(eager=False)
+    deg = fp.cut(nbr.select(F.col("src").alias("node"), "outdeg").distinct())
+    slots = fp.cut(
+        nbr.select(F.col("src").alias("_s"), F.col("rn").alias("_rn"), F.col("dst").alias("_d"))
     )
-    slots = nbr.select(
-        F.col("src").alias("_s"), F.col("rn").alias("_rn"), F.col("dst").alias("_d")
-    ).localCheckpoint(eager=False)
     out = starts
-    frontier = starts.localCheckpoint(eager=False)
+    frontier = fp.cut(starts)
     for t in range(1, walk_len + 1):
         stepped = frontier.join(deg, "node").select(
             "walk_id",
@@ -921,23 +912,21 @@ def random_walks(
                 % F.col("outdeg")
             ).alias("slot"),
         )
-        nxt = (
+        nxt, n = fp.count(
             stepped.join(
                 slots,
                 (stepped["node"] == slots["_s"]) & (stepped["slot"] == slots["_rn"]),
-            )
-            .select(
+            ).select(
                 "walk_id",
                 F.lit(t).alias("step"),
                 F.col("_d").alias("node"),
             )
-            .localCheckpoint(eager=False)  # one probe job per step
         )
-        if nxt.isEmpty():
+        if n == 0:
             break
         out = out.unionByName(nxt)
         frontier = nxt
-    return out
+    return fp.result(out)
 
 
 def harmonic_centrality(
@@ -947,7 +936,6 @@ def harmonic_centrality(
     src: str = "src",
     dst: str = "dst",
     directed: bool = False,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Seed-set harmonic closeness -> (node, n_reaching, harmonic):
     for every node reached from the seed set, harmonic(v) =
@@ -957,44 +945,19 @@ def harmonic_centrality(
 
     Per-seed labeled BFS: the frontier carries (seed, node) pairs so each
     seed's distances stay separate (bfs_distances collapses to the
-    nearest seed; this op cannot). State is O(|seeds| * V) — the caller
-    controls |seeds|, that is the sampling knob. Each round joins only
-    the live frontier against the edge list on the node key and
-    anti-joins the settled set on (seed, node); shuffle volume is
-    O(frontier out-edges). The 1/d fold is one partial-agg sum per node
-    (round 8 absorbs sum-order ulps, the shared convention)."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    if not directed:
-        e = (
-            e.unionByName(
-                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-    settled = (
+    nearest seed; this op cannot): _expand_frontier keyed on (seed, node).
+    State is O(|seeds| * V) — the caller controls |seeds|, that is the
+    sampling knob. The 1/d fold is one partial-agg sum per node (round 8
+    absorbs sum-order ulps, the shared convention)."""
+    fp = Fixpoint("harmonic_centrality")
+    start = (
         sources.select(F.col(sources.columns[0]).alias("seed"))
         .distinct()
         .select("seed", F.col("seed").alias("node"), F.lit(0).alias("dist"))
-        .localCheckpoint(eager=False)
     )
-    frontier = settled
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-            .join(settled, ["seed", "node"], "left_anti")
-            .select("seed", "node", F.lit(hop).alias("dist"))
-            .localCheckpoint(eager=False)  # one probe job per hop
-        )
-        if nxt.isEmpty():
-            break
-        settled = settled.unionByName(nxt)
-        if hop % checkpoint_every == 0:
-            settled = settled.localCheckpoint(eager=False)
-        frontier = nxt
-    return (
+    e = _hop_edges(fp, edges, src, dst, directed)
+    settled = _expand_frontier(fp, e, start, ["seed", "node"], max_hops)
+    return fp.result(
         settled.filter(F.col("dist") > 0)
         .groupBy("node")
         .agg(
@@ -1011,7 +974,6 @@ def personalized_pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 2,
     weight: str | None = None,
 ) -> DataFrame:
     """Personalized PageRank -> (node, rank): random walk with restart to
@@ -1026,80 +988,20 @@ def personalized_pagerank(
     Initial mass 1/|S| on seeds, 0 elsewhere; dangling mass restarts to
     the seeds (the standard PPR convention — mass conservation holds, so
     ranks always sum to 1). With S = all nodes this reduces float-exactly
-    to pagerank above (the unit test pins it). Multigraph semantics and
-    the fully-lazy one-row-broadcast dangling fold are identical to
-    pagerank — same per-iteration shuffle shape: one join vs out-degrees +
-    one partial-agg groupBy, both on the node key."""
-    w_col = F.col(weight).cast("double") if weight else F.lit(1.0)
-    # static across iterations — checkpoint once (see pagerank)
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w_col.alias("w"))
-        .groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
-        .localCheckpoint(eager=False)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    to pagerank (the unit test pins it): both run _power_iteration, with
+    the seed indicator joined onto the node table here."""
+    fp = Fixpoint("personalized_pagerank")
+    e = _weighted_edges(fp, edges, src, dst, weight)
     seed_set = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
     n_seeds = seed_set.count()
     if n_seeds == 0:
         raise ValueError("personalized_pagerank needs a non-empty seed set")
-    nodes = (
-        nodes.join(seed_set.withColumn("is_seed", F.lit(1.0)), "node", "left")
+    nodes = fp.cut(
+        _nodes(e)
+        .join(seed_set.withColumn("is_seed", F.lit(1.0)), "node", "left")
         .select("node", F.coalesce("is_seed", F.lit(0.0)).alias("is_seed"))
-        .localCheckpoint(eager=False)
     )
-    out_deg = (
-        e.groupBy("src").agg(F.sum("w").alias("out_w")).localCheckpoint(eager=False)
-    )
-
-    ranks = nodes.select(
-        "node", "is_seed", (F.col("is_seed") / n_seeds).alias("rank")
-    )
-    base = (1.0 - damping) / n_seeds
-    for i in range(iterations):
-        # lazy checkpoint before the dangling scalar — see pagerank
-        with_deg = (
-            ranks.join(out_deg, ranks["node"] == out_deg["src"], "left")
-            .select("node", "rank", "out_w")
-            .localCheckpoint(eager=False)
-        )
-        dang = with_deg.filter(F.col("out_w").isNull()).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang")
-        )
-        contribs = (
-            with_deg.filter(F.col("out_w").isNotNull())
-            .join(e, with_deg["node"] == e["src"])
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") * F.col("w") / F.col("out_w")).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "node",
-                "is_seed",
-                (
-                    F.lit(base) * F.col("is_seed")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("in_sum"), F.lit(0.0))
-                        + F.col("dang") / n_seeds * F.col("is_seed")
-                    )
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            # lazy: one caller-action job for the whole chain (see pagerank)
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks.select("node", "rank")
+    return _power_iteration(fp, e, nodes, n_seeds, iterations, damping)
 
 
 def clustering_coefficient(
@@ -1118,40 +1020,9 @@ def clustering_coefficient(
     explode attributes it to each corner, and one partial-agg groupBy
     counts per node. Triangle volume (not Σ outdeg² wedge volume) is the
     only row population beyond the edge list."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-        .localCheckpoint(eager=False)
-    )
-    ann = und.join(
-        deg.withColumnRenamed("node", "a").withColumnRenamed("deg", "deg_a"), "a"
-    ).join(deg.withColumnRenamed("node", "b").withColumnRenamed("deg", "deg_b"), "b")
-    a_first = (F.col("deg_a") < F.col("deg_b")) | (
-        (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
-    )
-    oriented = ann.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-    )
-    adj = oriented.groupBy("u").agg(F.collect_list("v").alias("nb"))
-    tri = (
-        oriented.join(adj, "u")
-        .join(adj.select(F.col("u").alias("v"), F.col("nb").alias("nb_v")), "v")
-        .select(
-            "u",
-            "v",
-            F.explode(F.array_intersect("nb", "nb_v")).alias("w"),
-        )
+    deg, pairs = _degree_ordered(_canonical_edges(edges, src, dst))
+    tri = pairs.select(
+        "u", "v", F.explode(F.array_intersect("nb", "nb_v")).alias("w")
     )
     per_node = (
         tri.select(F.explode(F.array("u", "v", "w")).alias("node"))
@@ -1175,53 +1046,8 @@ def clustering_coefficient(
     )
 
 
-def _min_label_fixpoint(
-    nodes: DataFrame, e: DataFrame, from_col: str, to_col: str, label_alias: str
-) -> DataFrame:
-    """Min-label propagation to convergence over directed edges (labels
-    flow from `from_col`'s endpoint to `to_col`'s) -> (node, <label>).
-    Runs TWO propagation steps per convergence probe: the changed-count
-    action is a full job, and a converged step is idempotent, so probing
-    every other step halves the job count for the same fixpoint. The
-    step checkpoints are LAZY, so each probe is exactly ONE job that
-    materializes both steps and folds the changed count."""
-    lbl = nodes.select("node", F.col("node").alias(label_alias)).localCheckpoint(
-        eager=False
-    )
-    while True:
-        cur = lbl
-        for _ in range(2):
-            cand = (
-                e.join(cur, e[from_col] == cur["node"])
-                .groupBy(F.col(to_col).alias("node"))
-                .agg(F.min(label_alias).alias("_c2"))
-            )
-            cur = (
-                cur.join(cand, "node", "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col(label_alias), F.coalesce("_c2", F.col(label_alias))
-                    ).alias(label_alias),
-                )
-                .localCheckpoint(eager=False)
-            )
-        changed = (
-            cur.join(
-                lbl.withColumnRenamed(label_alias, "_old"), "node"
-            )
-            .filter(F.col(label_alias) != F.col("_old"))
-            .count()
-        )
-        lbl = cur
-        if changed == 0:
-            break
-    return lbl
-
-
 def strongly_connected_components(
     edges: DataFrame,
-    max_rounds: int = 20,
     src: str = "src",
     dst: str = "dst",
 ) -> DataFrame:
@@ -1242,69 +1068,57 @@ def strongly_connected_components(
     handful: every singleton whose color is itself peels immediately).
 
     Plan shape per fixpoint iteration: one edge-keyed join + one
-    partial-agg min groupBy on the node key (the pagerank family);
-    fixpoints run to CONVERGENCE (changed-count action per iteration,
-    localCheckpoint lineage cuts) — iteration count tracks the remaining
-    subgraph's diameter, not V. State is (node, label) pairs only."""
+    partial-agg min groupBy on the node key (the pagerank family). Both
+    passes are canonicalize.propagate_min_label run to CONVERGENCE (the
+    connected-components propagation: an observed changed count per two
+    steps) — iteration count tracks the remaining subgraph's diameter,
+    not V — and the rounds run until no node remains (each round's
+    emptiness probe on the remaining set). State is (node, label) pairs
+    only."""
+    fp = Fixpoint("strongly_connected_components")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    nodes, n_remaining = fp.count(_nodes(e))
     remaining = nodes
     out = None
-    while not remaining.isEmpty():
+    while n_remaining:
         # every round peels at least the minimal color's SCC, so this
-        # terminates; we run to FIXPOINT rather than silently dropping
-        # still-unlabeled nodes after max_rounds (a >20-singleton-SCC
-        # chain previously returned an incomplete result) — max_rounds
-        # stays in the signature for compatibility but no longer truncates
-        re = (
+        # terminates; it runs to FIXPOINT rather than dropping
+        # still-unlabeled nodes after a round limit
+        re = fp.cut(
             e.join(remaining.withColumnRenamed("node", "src"), "src", "left_semi")
             .join(remaining.withColumnRenamed("node", "dst"), "dst", "left_semi")
-            .localCheckpoint(eager=False)
         )
         # (Considered and rejected: an FW-BW-style TRIM prefilter for
         # trivial SCCs — on cycle-dominated graphs like the bench fixture
         # it never fires and costs an extra probe job per round; measured
         # 7.2s -> 8.7s. The coloring rounds already peel singletons.)
         # (1) color(v) = min id reaching v: propagate src's color to dst
-        color = _min_label_fixpoint(
-            remaining, re, "src", "dst", label_alias="color"
+        color = propagate_min_label(fp, remaining, re).withColumnRenamed(
+            "label", "color"
         )
         # (2) within each color class, f(v) = min same-class id reachable
         # FROM v: propagate dst's label to src on color-matched edges
-        ec = (
+        ec = fp.cut(
             re.join(color.withColumnRenamed("node", "src").withColumnRenamed("color", "cs"), "src")
             .join(color.withColumnRenamed("node", "dst").withColumnRenamed("color", "cd"), "dst")
             .filter(F.col("cs") == F.col("cd"))
-            .select("src", "dst")
-            .localCheckpoint(eager=False)
+            .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        f = _min_label_fixpoint(remaining, ec, "dst", "src", label_alias="f")
-        labeled = (
+        f = propagate_min_label(fp, remaining, ec).withColumnRenamed("label", "f")
+        labeled = fp.cut(
             color.join(f, "node")
             .filter(F.col("color") == F.col("f"))
             .select(F.col("node").alias("member"), F.col("color").alias("scc_id"))
-            .localCheckpoint(eager=False)
         )
-        out = (
-            labeled
-            if out is None
-            else out.unionByName(labeled).localCheckpoint(eager=False)
-        )
-        remaining = (
+        out = labeled if out is None else fp.cut(out.unionByName(labeled))
+        remaining, n_remaining = fp.count(
             remaining.join(
                 labeled.select(F.col("member").alias("node")), "node", "left_anti"
-            ).localCheckpoint(eager=False)
+            )
         )
     if out is None:
-        return nodes.select(
-            F.col("node").alias("member"), F.col("node").alias("scc_id")
-        ).limit(0)
-    return out
+        out = nodes.select(F.col("node").alias("member"), F.col("node").alias("scc_id"))
+    return fp.result(out)
 
 
 def katz_centrality(
@@ -1313,7 +1127,6 @@ def katz_centrality(
     alpha: float = 0.1,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Katz centrality -> (node, katz): k_{t+1}(v) = 1 + alpha * sum over
     in-edges u->v of k_t(u), truncated at `iterations` — counts walks of
@@ -1326,19 +1139,11 @@ def katz_centrality(
     Simple-digraph semantics (edges deduped). Per iteration: ONE
     edge-keyed join + one partial-agg sum on the node key — the pagerank
     shuffle shape minus the degree join and the dangling fold (Katz needs
-    neither). Fully lazy between localCheckpoints; the deduped edge list
-    is checkpointed once (static across iterations)."""
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    neither). Fully lazy between cuts; the deduped edge list is cut once
+    (static across iterations)."""
+    fp = Fixpoint("katz_centrality")
+    e = fp.cut(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct())
+    nodes = fp.cut(_nodes(e))
     a = F.lit(float(alpha))
     katz = nodes.select("node", F.lit(1.0).alias("katz"))
     for i in range(iterations):
@@ -1351,7 +1156,7 @@ def katz_centrality(
             "node",
             (F.lit(1.0) + a * F.coalesce("s", F.lit(0.0))).alias("katz"),
         )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            # lazy: one caller-action job for the whole chain (see pagerank)
-            katz = katz.localCheckpoint(eager=False)
-    return katz
+        last = i == iterations - 1
+        if (i + 1) % POWER_CUT_EVERY == 0 or last:
+            katz = fp.cut(katz, eager=last)
+    return fp.result(katz)

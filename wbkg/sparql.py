@@ -89,6 +89,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from wbkg.fixpoint import Fixpoint
+
 RDF_TYPE_IRI = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 _TOKEN = re.compile(
@@ -1170,14 +1172,15 @@ def _path_closure(step: DataFrame, max_iters: int = PATH_MAX_ITERS) -> DataFrame
     path DOUBLING: each round joins the new pairs against the accumulated
     closure, so reachable path length grows as 2^round — max_iters=16
     covers diameters past 65k, and a graph that still hasn't converged
-    warns instead of silently truncating (same contract as
-    connected_components). localCheckpoint per round truncates lineage;
+    warns instead of silently truncating (the wbkg/fixpoint.py policy every
+    iterative operator shares). The new pairs' emptiness is the per-round
+    probe, and the closure is cut every round to truncate lineage;
     property-path graphs are vocabulary-bounded here (edges over a filtered
     predicate), not corpus-bounded."""
-    base = step.distinct().localCheckpoint()
+    fp = Fixpoint("property-path closure")
+    base = fp.cut(step.distinct(), eager=True)
     total, frontier = base, base
-    converged = False
-    for _ in range(max_iters):
+    for _ in fp.rounds(max_iters):
         # nonlinear seminaive: path(a,b) :- path(a,m), path(m,b) needs BOTH
         # delta-first and delta-second compositions for completeness
         nxt = (
@@ -1191,23 +1194,12 @@ def _path_closure(step: DataFrame, max_iters: int = PATH_MAX_ITERS) -> DataFrame
             )
             .distinct()
         )
-        new = nxt.join(total, ["a", "b"], "left_anti").localCheckpoint()
-        if not new.take(1):
-            converged = True
+        new, n = fp.count(nxt.join(total, ["a", "b"], "left_anti"))
+        if n == 0:
             break
-        total = total.unionByName(new).localCheckpoint()
+        total = fp.cut(total.unionByName(new), eager=True)
         frontier = new
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"property-path closure did not converge within {max_iters} "
-            "doubling rounds; results may be incomplete — raise "
-            "PATH_MAX_ITERS for graphs of diameter beyond 2^16",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return total
+    return fp.result(total)
 
 
 def _graph_nodes(edges: DataFrame) -> DataFrame:
@@ -1514,8 +1506,8 @@ def sparql_select(edges: DataFrame, query: str) -> DataFrame:
     Evaluation contract: compilation is lazy (a DataFrame plan comes back
     untouched) EXCEPT for (1) `+`/`*` property paths — the transitive
     closure is an inherently iterative fixpoint, so _path_closure runs its
-    doubling rounds (distinct/localCheckpoint/take per round, bounded by
-    PATH_MAX_ITERS) while this function builds the plan — and (2) queries
+    doubling rounds (one emptiness probe and one lineage cut per round,
+    bounded by PATH_MAX_ITERS) while this function builds the plan — and (2) queries
     where some group joins >= 3 triple patterns, which pay ONE
     partial-aggregated pred-count job to drive selectivity-based join
     ordering (_order_patterns; identical solution multiset, orders of
